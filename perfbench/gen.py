@@ -1,19 +1,17 @@
-"""Seeded input generators for the benchmark workloads.
+"""Seeded input generator for the sync workload.
 
 Everything here is plain pyarrow/numpy in the calling process, run outside
-the timed windows. Two generators:
+the timed windows. :class:`SyncCorpus` is the ``index_documents`` source,
+written as ``events.parquet``: the table the program's
+``sources.parquet.index_documents`` view reads. ``event_type`` is the index,
+``event_id`` the id, ``props`` the JSON document, ``ts`` the ``updated_at``
+watermark column, and ``event_id % 13 == 0`` marks a tombstone. Indexes have
+Zipf sizes; documents are lognormal JSON around 1 KB.
+:meth:`SyncCorpus.apply_batch` rewrites the table state for one CDC batch
+and keeps the ground truth: the live ``id -> document`` per index.
 
-- :class:`SyncCorpus`: the ``index_documents`` source for the two sync
-  workloads, written as ``events.parquet`` (the table the program's
-  ``sources.parquet.index_documents`` view reads: ``event_type`` is the
-  index, ``event_id`` the id, ``props`` the JSON document, ``ts`` the
-  ``updated_at`` watermark column, and ``event_id % 13 == 0`` marks a
-  tombstone). Indexes have Zipf sizes; documents are lognormal JSON around
-  1 KB. :meth:`SyncCorpus.apply_batch` rewrites the table state for one CDC
-  batch and keeps the ground truth: the live ``id -> document`` per index.
-- :func:`write_star_schema`: the star schema the registered queries read
-  (same tables and column types as the read-only test data), so the query
-  workload needs no file outside the benchmark's checkout.
+The query workload generates nothing: it reads a copy of the repository's
+sf0.01 test tables kept under ``perfbench/data``.
 """
 
 from __future__ import annotations
@@ -144,16 +142,19 @@ class SyncCorpus:
 
         ``small`` batches split their updates evenly over two of the
         original indexes, in a fixed rotation over their Zipf size ranks
-        (0 and 2, then 1 and 3, ...), so the n-th small batch of every seed
-        costs about the same; ``large`` ones spread over every index. A batch is 75% updates, 15% new ids
-        and 10% re-stamped tombstones. ``new_index`` adds one index;
+        that moves on every second batch (0 and 2 twice, then 1 and 3
+        twice, ...). The n-th small batch of every seed therefore costs
+        about the same, and each pair of consecutive batches hits the same
+        indexes, so a traced batch and the untraced one after it do the
+        same work. ``large`` batches spread over every index. A batch is
+        75% updates, 15% new ids and 10% re-stamped tombstones. ``new_index`` adds one index;
         ``drift`` bumps one small index's ``schema_name`` on all its rows,
         which forces the runner's schema-drift rebuild."""
         rng = self.rng
         n = max(3, int(round(share * len(self.id))))
         n_idx = len(self.indexes)
         if kind == "small":
-            k, m = self.n_small, self.n_original
+            k, m = self.n_small // 2, self.n_original
             chosen = np.array([k % m, (k + 2) % m])
             self.n_small += 1
         else:
@@ -225,122 +226,3 @@ def fingerprint(pairs) -> tuple[int, int]:
         total = (total + int.from_bytes(h, "little")) & 0xFFFFFFFFFFFFFFFF
         n += 1
     return n, total
-
-
-# -- the star schema read by the registered queries --------------------------
-
-def _round2(a: np.ndarray) -> np.ndarray:
-    return np.round(a, 2)
-
-
-def write_star_schema(out_dir: str, seed: int, scale: float = 0.01) -> dict[str, int]:
-    """Write the ten tables the registered queries read, with the column
-    names and types of the read-only test data, at ``scale`` (0.01 gives
-    60k lineitem rows). Returns rows per table."""
-    rng = np.random.default_rng(seed)
-    os.makedirs(out_dir, exist_ok=True)
-    n_cust, n_supp = int(150_000 * scale), max(10, int(10_000 * scale))
-    n_part, n_ord = int(200_000 * scale), int(1_500_000 * scale)
-    n_line, n_ev = int(6_000_000 * scale), int(1_000_000 * scale)
-    n_user, n_docs, n_vec = max(10, int(15_000 * scale)), int(50_000 * scale), int(50_000 * scale)
-    segs = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
-    adj, noun = ["red", "small", "hot", "old", "large", "blue", "big", "cold"], \
-        ["plate", "widget", "ring", "rod", "gear", "bolt", "pipe", "cap"]
-    day0 = np.datetime64("1995-01-01", "D")
-    words = np.asarray(
-        "join hash row batch scan column customer filter small slow merge "
-        "order vector line table data agg value key stream window a spark "
-        "part group big sort query fast the".split()
-    )
-
-    def pick(values, n):
-        return np.asarray(values)[rng.integers(0, len(values), n)]
-
-    tables: dict[str, pa.Table] = {}
-    tables["region"] = pa.table({
-        "r_regionkey": pa.array(np.arange(5), pa.int32()),
-        "r_name": ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"],
-    })
-    tables["nation"] = pa.table({
-        "n_nationkey": pa.array(np.arange(25), pa.int32()),
-        "n_name": [f"NATION_{i}" for i in range(25)],
-        "n_regionkey": pa.array(np.arange(25) % 5, pa.int32()),
-    })
-    tables["customer"] = pa.table({
-        "c_custkey": pa.array(np.arange(n_cust), pa.int64()),
-        "c_name": [f"Customer#{i:09d}" for i in range(n_cust)],
-        "c_nationkey": pa.array(rng.integers(0, 25, n_cust), pa.int32()),
-        "c_acctbal": _round2(rng.uniform(-999.99, 9999.99, n_cust)),
-        "c_mktsegment": pick(segs, n_cust),
-    })
-    tables["supplier"] = pa.table({
-        "s_suppkey": pa.array(np.arange(n_supp), pa.int64()),
-        "s_name": [f"Supplier#{i:09d}" for i in range(n_supp)],
-        "s_nationkey": pa.array(rng.integers(0, 25, n_supp), pa.int32()),
-        "s_acctbal": _round2(rng.uniform(-999.99, 9999.99, n_supp)),
-    })
-    tables["part"] = pa.table({
-        "p_partkey": pa.array(np.arange(n_part), pa.int64()),
-        "p_name": [f"{a} {b}" for a, b in zip(pick(adj, n_part), pick(noun, n_part))],
-        "p_brand": [f"Brand#{i}" for i in rng.integers(1, 26, n_part)],
-        "p_type": pick(["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"], n_part),
-        "p_size": pa.array(rng.integers(1, 51, n_part), pa.int32()),
-        "p_retailprice": np.round(900 + rng.integers(0, 1000, n_part) * 0.1, 1),
-    })
-    tables["orders"] = pa.table({
-        "o_orderkey": pa.array(np.arange(n_ord), pa.int64()),
-        "o_custkey": pa.array(rng.integers(0, n_cust, n_ord), pa.int64()),
-        "o_orderstatus": pick(["F", "O", "P"], n_ord),
-        "o_totalprice": _round2(rng.uniform(1000, 500_000, n_ord)),
-        "o_orderdate": pa.array(
-            (day0 + rng.integers(0, 2400, n_ord)).astype("datetime64[us]"),
-            pa.timestamp("us")),
-        "o_orderpriority": pick(["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"], n_ord),
-    })
-    tables["lineitem"] = pa.table({
-        "l_orderkey": pa.array(rng.integers(0, n_ord, n_line), pa.int64()),
-        "l_partkey": pa.array(rng.integers(0, n_part, n_line), pa.int64()),
-        "l_suppkey": pa.array(rng.integers(0, n_supp, n_line), pa.int64()),
-        "l_linenumber": pa.array(rng.integers(1, 8, n_line), pa.int32()),
-        "l_quantity": rng.integers(1, 51, n_line).astype(np.float64),
-        "l_extendedprice": _round2(rng.uniform(900, 105_000, n_line)),
-        "l_discount": rng.integers(0, 11, n_line) / 100.0,
-        "l_tax": rng.integers(0, 9, n_line) / 100.0,
-        "l_returnflag": pick(["A", "N", "R"], n_line),
-        "l_linestatus": pick(["F", "O"], n_line),
-        "l_shipdate": pa.array(
-            (day0 + 1 + rng.integers(0, 2500, n_line)).astype("datetime64[us]"),
-            pa.timestamp("us")),
-    })
-    ev_ts = np.sort(rng.integers(0, 30 * 86400 * 10**6, n_ev))
-    tables["events"] = pa.table({
-        "event_id": pa.array(np.arange(n_ev), pa.int64()),
-        "ts": pa.array(np.datetime64("2024-01-01", "us") + ev_ts, pa.timestamp("us")),
-        "user_id": pa.array(rng.integers(0, n_user, n_ev), pa.int64()),
-        "event_type": pick(["click", "error", "purchase", "signup", "view"], n_ev),
-        "value": np.maximum(0.01, _round2(rng.exponential(50.0, n_ev))),
-        "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n_ev)],
-    })
-    texts: list[str] = []
-    for d in range(n_docs):
-        if d > 20 and rng.random() < 0.05:  # near-duplicate of an earlier doc
-            texts.append(texts[int(rng.integers(0, d))] + " dup")
-        else:
-            texts.append(" ".join(pick(words, int(rng.integers(10, 100)))))
-    tables["documents"] = pa.table({
-        "doc_id": pa.array(np.arange(n_docs), pa.int64()),
-        "text": texts,
-        "lang": pick(["en", "en", "en", "de", "es", "fr", "zh"], n_docs),
-        "source": [f"src{i % 20}" for i in range(n_docs)],
-        "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-    })
-    emb = rng.normal(size=(n_vec, 64)).astype(np.float32)
-    emb /= np.linalg.norm(emb, axis=1, keepdims=True)
-    tables["embeddings"] = pa.table({
-        "vec_id": pa.array(np.arange(n_vec), pa.int64()),
-        "embedding": pa.array(list(emb), pa.list_(pa.float32())),
-        "label": pa.array(rng.integers(0, 10, n_vec), pa.int32()),
-    })
-    for name, t in tables.items():
-        pq.write_table(t, os.path.join(out_dir, f"{name}.parquet"))
-    return {name: t.num_rows for name, t in tables.items()}

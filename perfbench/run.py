@@ -1,8 +1,8 @@
 """Benchmark entry point. Run from the root of a checkout:
 
-    python3 perfbench/run.py --workload sync_full --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload sync_incremental --seed 1 --seconds 5 --trace 0
 
-Workloads: ``sync_full``, ``sync_incremental``, ``query_mix`` (see
+Workloads: ``sync_incremental`` and ``query_mix`` (see
 ``perfbench/README.md``). The program is driven in-process on one
 ``local[nproc]`` session through its public entry points: the sync CLI's
 ``main`` with default flags, and the query registry's functions.
@@ -30,9 +30,11 @@ import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-# traced runs fail when layer self times leave more than 5% of the traced
-# operations' wall to the benchmark's own span
-MIN_COVERAGE = 0.95
+# traced runs fail when the layer spans under the CLI (runner, sources,
+# sinks, es_sink; plans on the query mix) leave more than 10% of the traced
+# operations' wall to the CLI's and the benchmark's own self time; the CLI's
+# inline work (its per-index mirror-reconcile counts) is about 7% of a sync
+MIN_COVERAGE = 0.90
 
 
 class TreeRss:

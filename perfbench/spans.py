@@ -80,6 +80,16 @@ def self_times(spans: list[Span]) -> list[float]:
     return out
 
 
+def coverage(spans: list[Span], wrappers=("op", "cli")) -> float:
+    """Share of the ``op`` spans' wall that layer spans account for. Each
+    of ``wrappers`` wraps a whole operation (the benchmark's ``op`` span and
+    the CLI's ``main``), so their self times count as unaccounted."""
+    wall = sum(s.dur for s in spans if s.name == "op")
+    missed = sum(st for s, st in zip(spans, self_times(spans))
+                 if s.name in wrappers)
+    return 1.0 - missed / wall if wall else 0.0
+
+
 class Tracer:
     def __init__(self) -> None:
         self.spans: list[Span] = []

@@ -8,12 +8,11 @@ from __future__ import annotations
 import threading
 from datetime import datetime
 
-import pyarrow.parquet as pq
 import pytest
 
 from fake_es import serve
-from gen import SyncCorpus, fingerprint, write_star_schema
-from spans import Span, self_times
+from gen import SyncCorpus, fingerprint
+from spans import Span, coverage, self_times
 
 
 # -- generator -----------------------------------------------------------------
@@ -47,13 +46,21 @@ def test_generator_truth_follows_the_source_rules():
                for d in live[drifted].values())
 
 
-def test_star_schema_is_deterministic(tmp_path):
-    rows = write_star_schema(str(tmp_path / "a"), 5, scale=0.001)
-    write_star_schema(str(tmp_path / "b"), 5, scale=0.001)
-    for name in rows:
-        ta = pq.read_table(tmp_path / "a" / f"{name}.parquet")
-        tb = pq.read_table(tmp_path / "b" / f"{name}.parquet")
-        assert ta.equals(tb), name
+def test_small_batches_hit_the_same_indexes_in_pairs():
+    c = SyncCorpus(11, 4_000, 4)
+    hit = []
+    for _ in range(6):
+        before = c.table().column("ts").to_pylist()
+        c.apply_batch("small", 0.002, datetime(2030, 1, 1))
+        after = c.table()
+        touched = {after.column("event_type")[i].as_py()
+                   for i, ts in enumerate(after.column("ts").to_pylist())
+                   if i >= len(before) or ts != before[i]}
+        hit.append(touched)
+    # a traced batch and the untraced one after it touch the same indexes
+    assert hit[0] == hit[1] == {"or-00", "or-02"}
+    assert hit[2] == hit[3] == {"or-01", "or-03"}
+    assert hit[4] == hit[5] == hit[0]
 
 
 # -- fake Elasticsearch --------------------------------------------------------
@@ -129,3 +136,14 @@ def test_self_time_subtracts_the_union_of_children():
     # self times of a nested chain add back up to the root's wall
     chain = [_span("op", 0, 8), _span("x", 1, 7, 0), _span("y", 2, 3, 1)]
     assert sum(self_times(chain)) == pytest.approx(8.0)
+
+
+def test_coverage_counts_the_cli_wrapper_as_unaccounted():
+    op = [_span("op", 0, 10), _span("cli", 0.5, 10, 0),
+          _span("runner", 1, 7, 1), _span("sinks.write", 2, 5, 2),
+          _span("es_sink.upsert", 7, 9.5, 1)]
+    # op self 0.5 and cli self 1.0 are missed; nested layers count once
+    assert coverage(op) == pytest.approx(0.85)
+    # a layer wrapper that stops firing leaves its time to the cli span
+    assert coverage(op[:2] + [_span("es_sink.upsert", 7, 9.5, 1)]) == pytest.approx(0.25)
+    assert coverage([]) == 0.0

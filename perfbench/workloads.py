@@ -10,6 +10,7 @@ snapshots happen between operations, outside the timed windows.
 from __future__ import annotations
 
 import contextlib
+import hashlib
 import io
 import json
 import os
@@ -22,8 +23,8 @@ from datetime import datetime
 
 import pyarrow.parquet as pq
 
-from gen import SyncCorpus, fingerprint, write_star_schema
-from spans import Tracer, self_times
+from gen import SyncCorpus, fingerprint
+from spans import Tracer, coverage, self_times
 
 APP = "arc-indexer-cli"
 N_SETUPS = 3  # set-ups per run; setup_s is their median
@@ -38,9 +39,10 @@ SMALL_SHARE, LARGE_SHARE = 0.001, 0.10
 CYCLE = ("small", "small", "small", "small", "large")
 MIN_SMALL = 4  # small batches per run; op_s is their median
 
-# the query tables are the same for every seed, as the read-only test data
-# would be; the seed shuffles the query order of each pass
-STAR_SCALE, STAR_SEED = 0.01, 20240101
+# the query tables: a byte-for-byte copy of the repository's read-only
+# sf0.01 test tables (seed 42), the scale its DuckDB oracles are checked at;
+# the seed shuffles the query order of each pass
+QUERY_DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "sf0.01")
 # one or two queries from each of the five query families
 QUERIES = (
     "q_kmeans",  # iterative, build-bound
@@ -374,10 +376,22 @@ def _query_pass(run: Run, data: str, order: list[str], signature=None,
     return total
 
 
+def check_query_data(run: Run, data: str) -> None:
+    """The copied tables must match their recorded SHA-256 sums."""
+    with open(os.path.join(data, "SHA256SUMS")) as f:
+        sums = dict(reversed(line.split()) for line in f if line.strip())
+    for name, want in sums.items():
+        with open(os.path.join(data, name), "rb") as f:
+            if hashlib.sha256(f.read()).hexdigest() != want:
+                run.fail(f"query table {name} differs from its recorded sum")
+    run.sizes["rows"] = {name.split(".")[0]: pq.ParquetFile(
+        os.path.join(data, name)).metadata.num_rows for name in sorted(sums)}
+
+
 def query_mix(run: Run, port: int) -> dict:
-    data = os.path.join(run.work, "star")
+    data = QUERY_DATA
     t0 = time.perf_counter()
-    run.sizes.update(rows=write_star_schema(data, STAR_SEED, STAR_SCALE))
+    check_query_data(run, data)
     oracle, signature = _oracle_signatures(run.root, data)
     run.sizes["gen_s"] = time.perf_counter() - t0
     rng = random.Random(run.seed)
@@ -501,9 +515,7 @@ def layer_metrics(run: Run, result: dict) -> dict[str, float]:
     m["spark.spill_bytes"] = counter("spill_bytes")
     m["spark.task_s"] = counter("task_s")
     m["spark.input_bytes"] = counter("input_bytes")
-    roots = [(s, st) for s, st in zip(spans, selfs) if s.name == "op"]
-    wall = sum(s.dur for s, _ in roots)
-    m["trace.coverage"] = 1.0 - sum(st for _, st in roots) / wall if wall else 0.0
+    m["trace.coverage"] = coverage(spans)
     kind = result["primary"]
     both = log.traced.get(kind) and log.walls.get(kind)
     m["trace.overhead_s"] = (
