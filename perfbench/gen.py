@@ -88,7 +88,6 @@ class SyncCorpus:
         self.doc = [self._new_doc(int(i)) for i in self.index]
         self.next_id = n_docs
         self.n_new_indexes = 0
-        self.n_small = 0
 
     # -- documents -----------------------------------------------------------
     def _body(self) -> str:
@@ -140,13 +139,11 @@ class SyncCorpus:
                     new_index: bool = False, drift: bool = False) -> BatchStats:
         """Apply one CDC batch of ``share`` of the corpus.
 
-        ``small`` batches split their updates evenly over two of the
-        original indexes, in a fixed rotation over their Zipf size ranks
-        that moves on every second batch (0 and 2 twice, then 1 and 3
-        twice, ...). The n-th small batch of every seed therefore costs
-        about the same, and each pair of consecutive batches hits the same
-        indexes, so a traced batch and the untraced one after it do the
-        same work. ``large`` batches spread over every index. A batch is
+        ``small`` batches split their updates evenly over the same two
+        original indexes, Zipf size ranks 0 and 2, so every small batch of
+        every seed costs about the same, and a traced batch and an
+        untraced one do the same work. ``large`` batches spread over every
+        index. A batch is
         75% updates, 15% new ids and 10% re-stamped tombstones. ``new_index`` adds one index;
         ``drift`` bumps one small index's ``schema_name`` on all its rows,
         which forces the runner's schema-drift rebuild."""
@@ -154,9 +151,7 @@ class SyncCorpus:
         n = max(3, int(round(share * len(self.id))))
         n_idx = len(self.indexes)
         if kind == "small":
-            k, m = self.n_small // 2, self.n_original
-            chosen = np.array([k % m, (k + 2) % m])
-            self.n_small += 1
+            chosen = np.array([0, 2])
         else:
             chosen = np.arange(n_idx)
         in_chosen = np.isin(self.index, chosen)

@@ -11,8 +11,10 @@ The last stdout line is one JSON object: ``correct``, ``attempted``,
 ``failed`` and ``metrics``. With ``--trace 0`` the metrics are the
 end-to-end ones; with ``--trace 1`` the per-layer ones, and the spans are
 written to ``.bench_work/spans-<workload>-<seed>.json``. The line before it
-names the workload's figures in the terms of its own operations. The exit
-code is non-zero when the program cannot be imported or a check fails.
+names the workload's figures in the terms of its own operations. Timings
+are walls scaled to a reference host speed (``hostspeed.py``); the raw
+walls are printed on the line before the JSON. The exit code is non-zero
+when the program cannot be imported or a check fails.
 """
 
 from __future__ import annotations
@@ -147,8 +149,11 @@ def main() -> int:
         print(f"cannot import the program from {ROOT}: {exc}", file=sys.stderr)
         return 2
 
+    import hostspeed
     from spans import Tracer, install
     from workloads import WORKLOADS, Run, layer_metrics, unit_of
+
+    hostspeed.probe()  # the first probe jobs after an idle spell read slow
 
     os.makedirs(work, exist_ok=True)
     tracer = Tracer()
@@ -196,7 +201,9 @@ def main() -> int:
     print(f"{args.workload} seed={args.seed} cpus={cpus} inputs={run.sizes} "
           + " ".join(f"{k}={v:.4f} {u}" for k, (v, u) in named.items())
           + f" setups_s={[round(x, 3) for x in run.setup_s]}"
-          + f" walls_s={ {k: [round(x, 3) for x in v] for k, v in log.walls.items()} }")
+          + f" setups_raw_s={[round(x, 3) for x in run.setup_raw_s]}"
+          + f" walls_s={ {k: [round(x, 3) for x in v] for k, v in log.walls.items()} }"
+          + f" walls_raw_s={ {k: [round(x, 3) for x in v] for k, v in log.raw.items()} }")
     for what in run.problems[:20]:
         print(f"FAILED: {what}", file=sys.stderr)
     print(json.dumps({"correct": run.failed == 0, "attempted": run.attempted,

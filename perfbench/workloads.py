@@ -4,7 +4,9 @@ reference's scheduled flow.
 
 A workload function gets a :class:`Run` and returns the workload's figures.
 Every operation is timed on its own; generation, output checks and
-snapshots happen between operations, outside the timed windows.
+snapshots happen between operations, outside the timed windows. Each timed
+operation and each set-up runs in a :class:`hostspeed.Window`, and the
+figures are its walls scaled to the reference host speed.
 """
 
 from __future__ import annotations
@@ -24,6 +26,7 @@ from datetime import datetime
 import pyarrow.parquet as pq
 
 from gen import SyncCorpus, fingerprint
+from hostspeed import Window
 from spans import Tracer, coverage, self_times
 
 APP = "arc-indexer-cli"
@@ -33,11 +36,13 @@ N_SETUPS = 3  # set-ups per run; setup_s is their median
 # shares; the per-index fixed cost, not the corpus bytes, sets a sync's wall
 SYNC_DOCS, SYNC_INDEXES = 12_000, 4
 SMALL_SHARE, LARGE_SHARE = 0.001, 0.10
-# the CDC schedule: four small batches, then a large one that also carries
-# a new index and a schema_name drift (reached when --seconds allows, and in
-# every traced run)
-CYCLE = ("small", "small", "small", "small", "large")
-MIN_SMALL = 4  # small batches per run; op_s is their median
+# the CDC schedule: small batches for --seconds (at least MIN_SMALL; op_s
+# is their median, which a slower first incremental sync does not move).
+# Traced runs end with one large batch that also carries a new index and a
+# schema_name drift; untraced runs skip it, so every timed batch syncs the
+# same indexes
+MIN_SMALL = 3
+MIN_PASSES = 2  # timed query passes per run; op_s is their median
 
 # the query tables: a byte-for-byte copy of the repository's read-only
 # sf0.01 test tables (seed 42), the scale its DuckDB oracles are checked at;
@@ -65,13 +70,18 @@ class Run:
     attempted: int = 0
     failed: int = 0
     problems: list[str] = field(default_factory=list)
-    setup_s: list[float] = field(default_factory=list)
+    setup_s: list[float] = field(default_factory=list)  # scaled walls
+    setup_raw_s: list[float] = field(default_factory=list)
     session_s: list[float] = field(default_factory=list)
     sizes: dict = field(default_factory=dict)
 
     def fail(self, what: str) -> None:
         self.failed += 1
         self.problems.append(what)
+
+    def add_setup(self, wall: float, scale: float) -> None:
+        self.setup_raw_s.append(wall)
+        self.setup_s.append(wall * scale)
 
     def new_session(self):
         """Stop the current session and start a fresh one (one set-up)."""
@@ -167,20 +177,24 @@ def check_sync(run: Run, corpus: SyncCorpus, sink: str, port: int,
 
 @dataclass
 class OpLog:
-    """Walls per operation class, split by whether the op was traced."""
+    """Walls per operation class: the raw walls, and the walls scaled to the
+    reference host speed, split by whether the op was traced."""
 
+    raw: dict[str, list[float]] = field(default_factory=dict)
     walls: dict[str, list[float]] = field(default_factory=dict)
     traced: dict[str, list[float]] = field(default_factory=dict)
     extra: dict[str, float] = field(default_factory=dict)
 
-    def add(self, kind: str, wall: float, traced: bool) -> None:
-        (self.traced if traced else self.walls).setdefault(kind, []).append(wall)
+    def add(self, kind: str, wall: float, scale: float, traced: bool) -> None:
+        self.raw.setdefault(kind, []).append(wall)
+        (self.traced if traced else self.walls).setdefault(kind, []).append(wall * scale)
 
     def count(self, kind: str) -> int:
         return len(self.walls.get(kind, [])) + len(self.traced.get(kind, []))
 
     def median(self, kind: str, traced: bool | None = False) -> float:
-        """Median wall of ``kind``: untraced ops, traced ops, or (None) all."""
+        """Median scaled wall of ``kind``: untraced ops, traced ops, or
+        (None) all."""
         if traced is None:
             vals = self.walls.get(kind, []) + self.traced.get(kind, [])
         else:
@@ -231,7 +245,9 @@ def _published_bytes(sink: str) -> int:
 
 def _sync_op(run: Run, log: OpLog, meter: SinkMeter, kind: str, argv: list[str],
              sink: str, port: int, changed_rows: int, changed_bytes: int):
-    """One timed CLI sync; traced runs trace every other op of a class."""
+    """One timed CLI sync; traced runs trace every other op of a class.
+    Returns the report, the raw wall and whether the op was traced; the
+    caller logs the wall once its probe window has closed."""
     traced = run.should_trace(log.count(kind))
     run.tracer.enabled = traced
     with meter.measure(sink, port, traced):
@@ -240,17 +256,16 @@ def _sync_op(run: Run, log: OpLog, meter: SinkMeter, kind: str, argv: list[str],
             report = run_cli(run, argv)
         wall = time.perf_counter() - t0
     run.tracer.enabled = False
-    log.add(kind, wall, traced)
     if traced:
         meter.totals["changed_rows"] += changed_rows
         meter.totals["changed_bytes"] += changed_bytes
         meter.totals["skipped_indexes"] += len((report or {}).get("skipped", []))
-    return report, wall
+    return report, wall, traced
 
 
 def sync_incremental(run: Run, port: int) -> dict:
     """Set-up: N_SETUPS x (fresh session + default-flag full sync with the ES
-    mirror and alias swap). Timed: CDC batches, each one default-flag
+    mirror and alias swap). Timed: small CDC batches, each one default-flag
     incremental CLI run with the mirror."""
     src, sink = os.path.join(run.work, "src"), os.path.join(run.work, "sink")
     t0 = time.perf_counter()
@@ -261,41 +276,45 @@ def sync_incremental(run: Run, port: int) -> dict:
     log, meter = OpLog(), SinkMeter()
     argv = ["--source", src, "--sink-dir", sink, "--es-nodes", f"127.0.0.1:{port}"]
     live = sum(len(d) for d in corpus.live().values())
-    full_s = []
     for _ in range(N_SETUPS):
-        t0 = time.perf_counter()
-        spark = run.new_session()
-        run.tracer.bind(spark, os.path.join(src, "events.parquet"),
-                        os.path.getsize(os.path.join(src, "events.parquet")))
-        report, wall = _sync_op(run, log, meter, "full", argv + ["--full-sync"],
-                                sink, port, live, corpus.live_bytes())
-        run.setup_s.append(time.perf_counter() - t0)
-        full_s.append(wall)
+        with Window() as win:
+            t0 = time.perf_counter()
+            spark = run.new_session()
+            run.tracer.bind(spark, os.path.join(src, "events.parquet"),
+                            os.path.getsize(os.path.join(src, "events.parquet")))
+            report, wall, traced = _sync_op(
+                run, log, meter, "full", argv + ["--full-sync"], sink, port,
+                live, corpus.live_bytes())
+            setup_wall = time.perf_counter() - t0
+        run.add_setup(setup_wall, win.scale)
+        log.add("full", wall, win.scale, traced)
         check_sync(run, corpus, sink, port, report, full=True)
     log.extra["space_amp"] = _published_bytes(sink) / corpus.live_bytes()
     amp_written = amp_changed = 0
     deadline = time.perf_counter() + run.seconds
-    step = 0
-    # traced runs also reach a large batch
-    while (time.perf_counter() < deadline or log.count("small") < MIN_SMALL
-           or (run.trace and log.count("large") < 1)):
-        kind = CYCLE[step % len(CYCLE)]
-        step += 1
+    kind = "small"
+    while kind:
         stats = corpus.apply_batch(
             kind, SMALL_SHARE if kind == "small" else LARGE_SHARE,
             datetime.now(), new_index=kind == "large", drift=kind == "large")
         corpus.write(src)
         before = inode_snapshot(sink)
-        report, _ = _sync_op(run, log, meter, kind, argv, sink, port,
-                             stats.changed_rows, stats.changed_bytes)
+        with Window() as win:
+            report, wall, traced = _sync_op(run, log, meter, kind, argv, sink, port,
+                                            stats.changed_rows, stats.changed_bytes)
+        log.add(kind, wall, win.scale, traced)
         after = inode_snapshot(sink)
         amp_written += sum(size for k, (_, size) in after.items() if k not in before)
         amp_changed += stats.changed_bytes
         check_sync(run, corpus, sink, port, report, full=False)
+        if time.perf_counter() < deadline or log.count("small") < MIN_SMALL:
+            kind = "small"
+        else:
+            kind = "large" if run.trace and not log.count("large") else None
     log.extra["write_amp"] = amp_written / max(1, amp_changed)
     run.sizes["docs_end"] = len(corpus.id)
     return {"primary": "small", "log": log, "meter": meter,
-            "named": {"full_sync_s": (statistics.median(full_s), "s"),
+            "named": {"full_sync_s": (log.median("full", None), "s"),
                       "space_amp": (log.extra["space_amp"], "ratio"),
                       "incr_small_s": (log.median("small", None), "s"),
                       "incr_large_s": (log.median("large", None), "s"),
@@ -398,26 +417,30 @@ def query_mix(run: Run, port: int) -> dict:
     for i in range(N_SETUPS):
         # the first warm pass collects every result for the oracle check;
         # the others run the timed passes' noop form
-        t0 = time.perf_counter()
-        run.new_session()
-        if i == 0:
-            _query_pass(run, data, list(QUERIES), signature, oracle)
-        else:
-            _query_pass(run, data, list(QUERIES))
-        run.setup_s.append(time.perf_counter() - t0)
+        with Window() as win:
+            t0 = time.perf_counter()
+            run.new_session()
+            if i == 0:
+                _query_pass(run, data, list(QUERIES), signature, oracle)
+            else:
+                _query_pass(run, data, list(QUERIES))
+            setup_wall = time.perf_counter() - t0
+        run.add_setup(setup_wall, win.scale)
     run.tracer.bind(run.spark)
     log = OpLog()
     deadline = time.perf_counter() + run.seconds
-    # traced runs need one traced and one untraced pass for the overhead
-    while time.perf_counter() < deadline or log.count("pass") < 1 + run.trace:
+    # a traced run needs a traced pass after the first and an untraced one,
+    # for the overhead
+    while (time.perf_counter() < deadline
+           or log.count("pass") < MIN_PASSES + run.trace):
         order = list(QUERIES)
         rng.shuffle(order)
         traced = run.should_trace(log.count("pass"))
         run.tracer.enabled = traced
-        with run.tracer.span("op", "pass"):
+        with Window() as win, run.tracer.span("op", "pass"):
             wall = _query_pass(run, data, order)
         run.tracer.enabled = False
-        log.add("pass", wall, traced)
+        log.add("pass", wall, win.scale, traced)
     return {"primary": "pass", "log": log, "meter": None,
             "named": {"query_mix_s": (log.median("pass", None), "s")}}
 
@@ -516,10 +539,12 @@ def layer_metrics(run: Run, result: dict) -> dict[str, float]:
     m["spark.task_s"] = counter("task_s")
     m["spark.input_bytes"] = counter("input_bytes")
     m["trace.coverage"] = coverage(spans)
+    # the first op of a kind is traced and may pay one-off costs, so the
+    # overhead compares the later traced ops with the untraced ones
     kind = result["primary"]
-    both = log.traced.get(kind) and log.walls.get(kind)
-    m["trace.overhead_s"] = (
-        log.median(kind, traced=True) - log.median(kind) if both else 0.0)
+    later = log.traced.get(kind, [])[1:]
+    m["trace.overhead_s"] = (statistics.median(later) - log.median(kind)
+                             if later and log.walls.get(kind) else 0.0)
     m["workload.large_op_s"] = log.median("large", None)
     return m
 
