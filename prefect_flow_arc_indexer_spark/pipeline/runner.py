@@ -1,9 +1,10 @@
 """Pipeline drivers reproducing the reference's three entry points (SURVEY
 §3 E1/E2/E3; reference ``main_flow``, ``flows/main_flow.py:603-762``):
 
-- :func:`full_sync` (E1): enumerate indexes -> order smallest-first -> per
-  index: write a fresh generation -> validate -> atomically publish -> count
-  reconcile; failed writes roll back their generation (X5).
+- :func:`full_sync` (E1): enumerate indexes -> order smallest-first -> ONE
+  write job stages every index's generation -> per index, smallest first:
+  promote the staged generation -> count audit -> atomically publish; a
+  failed index rolls back its generation (X5).
 - :func:`incremental_sync` (E2): per index, count changed rows since the
   inclusive watermark (skip-if-zero, T4), then merge upserts and tombstone
   deletes into the live generation (T3) and advance the watermark (T1).
@@ -18,16 +19,17 @@ Resilience / scheduling semantics carried over from the reference:
 
 - X4 flow-level retries (reference ``flows/main_flow.py:722-723``: 5 retries
   x 500 s on the stream task): both drivers accept ``(retries,
-  retry_delay_s)``; a failed index rolls back its half-written generation,
-  sleeps, and retries — only after exhaustion does the run abort.
-- X3 concurrency classes (reference ``flows/main_flow.py:685-687,721``): the
-  two largest indexes carry the ``pg-indexer-large`` tag; :func:`full_sync`
-  maps the tag onto ``spark.scheduler.pool`` via a task-local property so a
-  fair-scheduler config can cap / isolate the heavyweight jobs exactly as
-  the reference's Prefect concurrency limit does.
+  retry_delay_s)``; a failed step (the full sync's staged write, or one
+  index's promote/merge) rolls back what it wrote, sleeps, and retries —
+  only after exhaustion does the run abort.
+- X3 concurrency classes (reference ``flows/main_flow.py:685-687,721``) are
+  not needed: the reference tags its two largest indexes so their
+  per-index SQL queries do not swamp Postgres, but :func:`full_sync` reads
+  the source with ONE scan for all indexes, so there are no per-index
+  source jobs left to schedule apart.
 
-Spark notes: the per-index loop is *driver-side control flow* (as in the
-reference, where Prefect owns it); the data plane per index is one
+Spark notes: the per-index publish loop is *driver-side control flow* (as
+in the reference, where Prefect owns it); each data plane is one
 declarative DataFrame job, so Catalyst still sees whole plans. The
 incremental merge is the parquet-sink equivalent of ES upsert+delete-by-id:
 ``old ANTI JOIN batch ids  UNION  batch upserts`` — at production scale the
@@ -39,7 +41,6 @@ from __future__ import annotations
 import os
 import shutil
 import time
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime
 
@@ -50,12 +51,6 @@ from prefect_flow_arc_indexer_spark.pipeline.sinks import (
     generation_timestamp,
 )
 from prefect_flow_arc_indexer_spark.streaming.watermark import WatermarkStore
-
-# Reference concurrency tags (flows/main_flow.py:685-687,721); the top-2
-# largest indexes run under the -large class (same rule as q_topk_tail).
-POOL_DEFAULT = "pg-indexer"
-POOL_LARGE = "pg-indexer-large"
-N_LARGE = 2
 
 # Reference JSONB probe path (flows/main_flow.py:69:
 # ``document->'schema_maintainer'->>'schema_name'``).
@@ -74,7 +69,6 @@ class SyncReport:
     dropped_orphans: list[str] = field(default_factory=list)
     rebuilt: list[str] = field(default_factory=list)  # T7 forced rebuilds
     retried: dict[str, int] = field(default_factory=dict)  # X4 retries used
-    pools: dict[str, str] = field(default_factory=dict)  # X3 pool per index
     # X7 applied to the ES mirror: alias count == ES _count after the
     # mirror writes (warn-only, like the reference's reconcile)
     mirror_reconcile: dict[str, bool] = field(default_factory=dict)
@@ -109,7 +103,7 @@ def _order_by_size(docs: DataFrame, indexes: list[str]) -> list[str]:
 
 
 def _run_with_retries(
-    index: str,
+    indexes: list[str],
     attempt,
     rollback,
     report: SyncReport,
@@ -119,17 +113,19 @@ def _run_with_retries(
 ) -> None:
     """X4: run ``attempt()`` up to ``1 + retries`` times; every failure
     rolls back via ``rollback()`` (X5) so a retry starts from a clean sink;
-    the last failure re-raises after a final rollback."""
+    the last failure re-raises after a final rollback. ``indexes`` are the
+    indexes the attempt writes (all of them for the staged write); each is
+    charged the retries used and, on exhaustion, recorded as rolled back."""
     for n in range(retries + 1):
         try:
             attempt()
-            if n:
-                report.retried[index] = n
+            for index in indexes if n else ():
+                report.retried[index] = report.retried.get(index, 0) + n
             return
         except Exception:
             rollback()
             if n == retries:
-                report.rolled_back.append(index)
+                report.rolled_back.extend(indexes)
                 raise
             sleep(retry_delay_s)
 
@@ -186,8 +182,8 @@ def _unescape_partition_value(s: str) -> str:
     return "".join(out)
 
 
-def one_pass_live(docs: DataFrame, indexes: list[str]) -> DataFrame:
-    """The fused full-sync data plane: ONE frame holding every index's live
+def live_documents(docs: DataFrame, indexes: list[str]) -> DataFrame:
+    """The full-sync data plane: ONE frame holding every index's live
     documents, pre-shuffled on ``index`` so the ``partitionBy`` write emits
     one directory per index from few tasks (the
     ``pipeline.partitioned.write_partitioned`` discipline). A full sync
@@ -201,46 +197,31 @@ def one_pass_live(docs: DataFrame, indexes: list[str]) -> DataFrame:
     )
 
 
-def _full_sync_one_pass(
-    spark: SparkSession,
+def _write_stage(
     docs: DataFrame,
-    sink: VersionedSink,
-    report: SyncReport,
-    ts: str,
-    retries: int,
-    retry_delay_s: float,
-    sleep,
-    bucketed: bool = False,
-    n_buckets: int = 16,
-) -> None:
-    """One Spark job writes every index's generation data (partitionBy on
-    ``index`` into a staging dir, single fact-table scan); the per-index
-    write-audit-publish loop stays driver-side: each staged partition
-    directory is renamed into place as its generation, reconciled against
-    per-index expected counts collected by an ``Observation`` ON the write
-    job itself (one conditional count per index — #indexes is
-    catalog-bounded — so reconciliation costs ZERO extra scans), and
-    atomically published. Rollback moves a generation back to staging so a
-    retry can re-promote it."""
+    indexes: list[str],
+    stage: str,
+    bucketed: bool,
+    n_buckets: int,
+) -> dict[str, int]:
+    """Write every index's live documents under ``stage``, one
+    ``index=<name>`` partition directory each, in one job (single
+    fact-table scan), and return each index's live count. The counts come
+    from an ``Observation`` on the write job itself (one conditional count
+    per index — #indexes is catalog-bounded), so the publish audit costs
+    ZERO extra source scans."""
     from pyspark.sql import Observation
 
-    from prefect_flow_arc_indexer_spark.pipeline.bucketed import (
-        _write_marker,
-        bucket_of,
-        write_generation_bucketed,
-    )
+    from prefect_flow_arc_indexer_spark.pipeline.bucketed import bucket_of
 
-    live_all = one_pass_live(docs, report.indexes)
-    stage = os.path.join(sink.base_dir, f"_stage_{ts}")
-    os.makedirs(sink.base_dir, exist_ok=True)
-    obs = Observation(f"one_pass_counts_{ts}")
-    observed = live_all.observe(
+    obs = Observation()  # an Observation serves one query: one per attempt
+    observed = live_documents(docs, indexes).observe(
         obs,
         *(
             F.sum(F.when(F.col("index") == idx, 1).otherwise(0))
             .cast("long")
             .alias(f"c_{n}")
-            for n, idx in enumerate(report.indexes)
+            for n, idx in enumerate(indexes)
         ),
     )
     part_cols = ["index"]
@@ -253,22 +234,86 @@ def _full_sync_one_pass(
         part_cols = ["index", "bucket"]
     observed.write.partitionBy(*part_cols).mode("overwrite").parquet(stage)
     counts = obs.get  # blocks until the write job finishes
-    expected = {
-        idx: counts[f"c_{n}"] or 0 for n, idx in enumerate(report.indexes)
+    return {idx: counts[f"c_{n}"] or 0 for n, idx in enumerate(indexes)}
+
+
+def _staged_dirs(stage: str) -> dict[str, str]:
+    """index -> staged partition dir, resolved by DECODING Spark's
+    partition-value escaping (escapePathName writes %XX for chars that are
+    unsafe in a path, e.g. 'a:b' stages as 'index=a%3Ab'): building
+    'index={value}' by hand would miss every escaped name and the publish
+    audit would abort a perfectly good sync."""
+    return {
+        _unescape_partition_value(entry[len("index="):]): os.path.join(
+            stage, entry
+        )
+        for entry in (os.listdir(stage) if os.path.isdir(stage) else [])
+        if entry.startswith("index=")
     }
-    # Resolve each index's staged dir by DECODING Spark's partition-value
-    # escaping (escapePathName writes %XX for chars that are unsafe in a
-    # path, e.g. 'a:b' stages as 'index=a%3Ab'): building 'index={value}'
-    # by hand would miss every escaped name and the guard below would abort
-    # a perfectly good sync. Unknown dirs are left unmapped and the audit
-    # abort still protects against a genuinely missing stage.
-    staged_dirs: dict[str, str] = {}
-    for entry in os.listdir(stage) if os.path.isdir(stage) else []:
-        if entry.startswith("index="):
-            staged_dirs[_unescape_partition_value(entry[len("index="):])] = (
-                os.path.join(stage, entry)
-            )
+
+
+def full_sync(
+    spark: SparkSession,
+    docs: DataFrame,
+    sink: VersionedSink,
+    or_ids: list[str] | None = None,
+    now: datetime | None = None,
+    retries: int = 0,
+    retry_delay_s: float = 0.0,
+    sleep=time.sleep,
+    bucketed: bool = False,
+    n_buckets: int = 16,
+) -> SyncReport:
+    """E1: full rebuild with write-audit-publish per index.
+
+    The data plane is ONE Spark job: a ``partitionBy("index")`` write
+    (single fact-table scan) stages every index's generation under
+    ``_stage_<ts>``, retried as a whole under X4. The promote-audit-publish
+    loop stays per index and driver-side, smallest index first: the staged
+    partition directory is renamed into place as the generation, its count
+    is audited against the live count the write job observed, and the
+    alias is atomically published. A count mismatch aborts before publish;
+    rollback moves the generation back to staging so a retry can
+    re-promote it. ``bucketed=True`` lays generations out hash-bucketed by
+    id (``pipeline.bucketed``) so later incremental merges rewrite only
+    touched buckets.
+    """
+    from prefect_flow_arc_indexer_spark.pipeline.bucketed import (
+        _write_marker,
+        write_generation_bucketed,
+    )
+
+    report = SyncReport()
+    if or_ids:
+        indexes = [x.lower() for x in or_ids]  # P8, flows/main_flow.py:640
+    else:
+        indexes = _enumerate_indexes(docs)
+        # X8: orphan cleanup only runs on unpinned full syncs
+        report.dropped_orphans = sink.cleanup_orphans(indexes)
+    if not indexes:
+        return report
+    report.indexes = _order_by_size(docs, indexes)
+    ts = generation_timestamp(now)
+    stage = os.path.join(sink.base_dir, f"_stage_{ts}")
+    os.makedirs(sink.base_dir, exist_ok=True)
+    expected: dict[str, int] = {}
+
+    def write_stage():
+        expected.update(
+            _write_stage(docs, report.indexes, stage, bucketed, n_buckets)
+        )
+
     try:
+        _run_with_retries(
+            report.indexes,
+            write_stage,
+            lambda: shutil.rmtree(stage, ignore_errors=True),
+            report,
+            retries,
+            retry_delay_s,
+            sleep,
+        )
+        staged_dirs = _staged_dirs(stage)
         for index in report.indexes:
             part_dir = staged_dirs.get(
                 index, os.path.join(stage, f"index={index}")
@@ -284,16 +329,16 @@ def _full_sync_one_pass(
                     if bucketed:
                         _write_marker(gen_path, n_buckets)
                 if os.path.isdir(gen_path):
+                    # X7: footer-only count (parquet aggregate pushdown)
                     actual = spark.read.parquet(gen_path).count()
                 elif want > 0:
                     # the write job counted live docs for this index but its
-                    # staged partition dir is absent (partition-value
-                    # escaping of an unusual index name, prior partial
+                    # staged partition dir is absent (prior partial
                     # failure): publishing would commit an EMPTY generation
                     # over live data — abort so _run_with_retries rolls back,
                     # mirroring compact()'s audit-abort discipline
                     raise RuntimeError(
-                        f"one-pass stage for {index!r} missing: expected "
+                        f"staged generation for {index!r} missing: expected "
                         f"{want} docs but no staged partition at {part_dir}"
                     )
                 else:
@@ -313,7 +358,7 @@ def _full_sync_one_pass(
                     # short generation (lost files, concurrent truncation):
                     # abort-before-publish, same contract as compact()
                     raise RuntimeError(
-                        f"one-pass audit for {index!r} failed: expected "
+                        f"count audit for {index!r} failed: expected "
                         f"{want} docs, staged generation has {actual}"
                     )
                 report.reconcile_ok[index] = True
@@ -328,124 +373,11 @@ def _full_sync_one_pass(
                     shutil.rmtree(gen_path, ignore_errors=True)
 
             _run_with_retries(
-                index, attempt, rollback, report, retries, retry_delay_s,
+                [index], attempt, rollback, report, retries, retry_delay_s,
                 sleep,
             )
     finally:
         shutil.rmtree(stage, ignore_errors=True)
-
-
-def full_sync(
-    spark: SparkSession,
-    docs: DataFrame,
-    sink: VersionedSink,
-    or_ids: list[str] | None = None,
-    now: datetime | None = None,
-    retries: int = 0,
-    retry_delay_s: float = 0.0,
-    sleep=time.sleep,
-    parallel_large: bool = False,
-    one_pass: bool = False,
-    bucketed: bool = False,
-    n_buckets: int = 16,
-) -> SyncReport:
-    """E1: full rebuild with write-audit-publish per index.
-    ``bucketed=True`` lays generations out hash-bucketed by id
-    (``pipeline.bucketed``) so later incremental merges rewrite only
-    touched buckets.
-
-    ``parallel_large=True`` finishes X3 end-to-end (reference
-    ``run_large_indexer_parallel``, flows/main_flow.py:685-687,721): the
-    small indexes still run smallest-first sequentially, then the
-    ``pg-indexer-large`` class is submitted CONCURRENTLY from a driver
-    thread pool — each thread sets its own thread-local scheduler pool, so
-    a FAIR scheduler config actually sees both pools at once.
-
-    ``one_pass=True`` fuses the data plane: one ``partitionBy("index")``
-    write job (single fact-table scan) feeds every generation; publish/
-    reconcile remain per-index and driver-side. Implies the data plane is
-    already one parallel job, so ``parallel_large`` is moot there.
-    """
-    report = SyncReport()
-    if or_ids:
-        indexes = [x.lower() for x in or_ids]  # P8, flows/main_flow.py:640
-    else:
-        indexes = _enumerate_indexes(docs)
-        # X8: orphan cleanup only runs on unpinned full syncs
-        report.dropped_orphans = sink.cleanup_orphans(indexes)
-    if not indexes:
-        return report
-    report.indexes = _order_by_size(docs, indexes)
-    # X3: _order_by_size is ascending, so the top-N_LARGE are the tail
-    large = set(report.indexes[-N_LARGE:])
-    ts = generation_timestamp(now)
-    sc = spark.sparkContext
-    for index in report.indexes:
-        report.pools[index] = POOL_LARGE if index in large else POOL_DEFAULT
-
-    if one_pass:
-        _full_sync_one_pass(
-            spark, docs, sink, report, ts, retries, retry_delay_s, sleep,
-            bucketed=bucketed, n_buckets=n_buckets,
-        )
-        return report
-
-    def _sync_one(index: str) -> None:
-        # setLocalProperty is thread-local (pinned-thread mode), so each
-        # concurrent driver thread carries its own pool tag
-        sc.setLocalProperty("spark.scheduler.pool", report.pools[index])
-        try:
-            live = docs.where(
-                (F.col("index") == index) & ~F.col("is_deleted")
-            ).select("id", "document")
-            gen = sink.generation_name(index, ts)
-
-            def attempt(index=index, live=live, gen=gen):
-                if bucketed:
-                    from prefect_flow_arc_indexer_spark.pipeline.bucketed import (  # noqa: E501
-                        write_generation_bucketed,
-                    )
-
-                    write_generation_bucketed(
-                        sink, live, index, ts, n_buckets
-                    )
-                else:
-                    sink.write_generation(live, index, ts)
-                # X7: count reconciliation before the swap commits the alias
-                expected = live.count()
-                actual = spark.read.parquet(sink.generation_path(gen)).count()
-                report.reconcile_ok[index] = expected == actual
-                sink.publish(index, gen)
-                report.written[index] = actual
-
-            _run_with_retries(
-                index,
-                attempt,
-                lambda gen=gen: sink.drop_generation(gen),
-                report,
-                retries,
-                retry_delay_s,
-                sleep,
-            )
-        finally:
-            sc.setLocalProperty("spark.scheduler.pool", None)
-
-    small = [i for i in report.indexes if i not in large]
-    big = [i for i in report.indexes if i in large]
-    if parallel_large and len(big) > 1:
-        for index in small:
-            _sync_one(index)
-        with ThreadPoolExecutor(
-            max_workers=len(big), thread_name_prefix="pg-indexer-large"
-        ) as pool:
-            futures = [pool.submit(_sync_one, i) for i in big]
-            errs = [f.exception() for f in futures]
-        for e in errs:
-            if e is not None:
-                raise e
-    else:
-        for index in report.indexes:
-            _sync_one(index)
     return report
 
 
@@ -540,7 +472,7 @@ def incremental_sync(
                 sink.publish(index, gen)
 
             _run_with_retries(
-                index,
+                [index],
                 attempt,
                 lambda gen=gen: sink.drop_generation(gen),
                 report,
@@ -578,7 +510,7 @@ def incremental_sync(
                 sink.publish(index, gen)
 
         _run_with_retries(
-            index,
+            [index],
             attempt,
             lambda gen=gen: sink.drop_generation(gen),
             report,

@@ -1,4 +1,4 @@
-"""End-to-end lifecycle of the round-5 pipeline pieces composed: one-pass
+"""End-to-end lifecycle of the round-5 pipeline pieces composed: single-scan
 bucketed full sync -> bucketed incremental merge (hard-linked untouched
 buckets) -> bucket-preserving compaction -> streaming continuation. Each
 piece has unit tests; this pins that they COMPOSE on one sink."""
@@ -33,11 +33,11 @@ def test_one_pass_bucketed_full_sync_then_merge_then_compact(spark, tmp_path):
     sink = VersionedSink(str(tmp_path / "life_sink"))
     docs0 = _docs(spark, _rows(40) + _rows(10, index="beta"))
 
-    # 1) one-pass + bucketed: single-scan data plane lays down the
+    # 1) bucketed full sync: the single-scan data plane lays down the
     #    hash-bucketed layout for every index
     report = full_sync(
         spark, docs0, sink, now=datetime(2024, 2, 1),
-        one_pass=True, bucketed=True, n_buckets=N_BUCKETS,
+        bucketed=True, n_buckets=N_BUCKETS,
     )
     assert report.written == {"beta": 10, "alpha": 40}
     assert all(report.reconcile_ok.values())
@@ -114,7 +114,7 @@ def test_one_pass_bucketed_respects_or_ids(spark, tmp_path):
     docs = _docs(spark, _rows(6) + _rows(4, index="beta"))
     report = full_sync(
         spark, docs, sink, or_ids=["ALPHA"], now=datetime(2024, 2, 1),
-        one_pass=True, bucketed=True, n_buckets=N_BUCKETS,
+        bucketed=True, n_buckets=N_BUCKETS,
     )
     assert report.indexes == ["alpha"]  # P8 lowercase + pinning
     assert not sink.alias_exists("beta")

@@ -17,6 +17,7 @@ from prefect_flow_arc_indexer_spark.pipeline.runner import (
 )
 from prefect_flow_arc_indexer_spark.pipeline.sinks import VersionedSink
 from prefect_flow_arc_indexer_spark.streaming.watermark import WatermarkStore
+from tests.conftest import SF_DIR
 
 DOCS_SCHEMA = (
     "`index` string, id string, document string, is_deleted boolean, "
@@ -374,36 +375,234 @@ def test_flow_level_retries_exhaust_and_rollback(spark, sink, monkeypatch):
     assert sink.list_generations() == []  # every attempt rolled back
 
 
-def test_scheduler_pool_tags_top2_large(spark, sink, monkeypatch):
-    """X3 (reference flows/main_flow.py:685-687,721): the two largest
-    indexes run under the pg-indexer-large scheduler pool; the local
-    property is live while their jobs execute and cleared afterwards."""
-    rows = BASE_ROWS + [
+def test_full_sync_retries_failed_staged_write(spark, sink, monkeypatch):
+    """X4 covers the data plane too: a transient failure of the parquet
+    write rolls back what it staged and retries after the delay instead of
+    aborting the run."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    original = DataFrameWriter.parquet
+    calls = {"n": 0}
+
+    def flaky_parquet(self, *args, **kwargs):
+        calls["n"] += 1
+        if calls["n"] == 1:
+            raise RuntimeError("transient write failure")
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", flaky_parquet)
+    slept = []
+    report = full_sync(
+        spark,
+        _docs(spark, BASE_ROWS),
+        sink,
+        now=datetime(2024, 2, 1),
+        retries=1,
+        retry_delay_s=30.0,
+        sleep=slept.append,
+    )
+    assert slept == [30.0]
+    assert report.rolled_back == []
+    assert report.written == {"beta": 1, "alpha": 2}
+    assert sink.alias_exists("beta") and sink.alias_exists("alpha")
+    assert not [d for d in os.listdir(sink.base_dir) if d.startswith("_stage")]
+
+
+# -- single-scan full-sync data plane ------------------------------------------
+
+
+def _three_index_rows():
+    return BASE_ROWS + [
         ("gamma", "20", '{"v": 20}', False, "2024-01-01 00:00:00"),
         ("gamma", "21", '{"v": 21}', False, "2024-01-01 00:00:00"),
         ("gamma", "22", '{"v": 22}', False, "2024-01-01 00:00:00"),
     ]
-    seen_pools = {}
-    original = VersionedSink.write_generation
 
-    def spying_write(self, df, alias, timestamp):
-        seen_pools[alias] = df.sparkSession.sparkContext.getLocalProperty(
-            "spark.scheduler.pool"
-        )
-        return original(self, df, alias, timestamp)
 
-    monkeypatch.setattr(VersionedSink, "write_generation", spying_write)
-    report = full_sync(spark, _docs(spark, rows), sink, now=datetime(2024, 2, 1))
-    # sizes: beta=1 < alpha=2 < gamma=3 -> alpha+gamma are the top 2
-    assert report.pools == {
-        "beta": "pg-indexer",
-        "alpha": "pg-indexer-large",
-        "gamma": "pg-indexer-large",
-    }
-    assert seen_pools == report.pools  # property was live during each write
-    assert (
-        spark.sparkContext.getLocalProperty("spark.scheduler.pool") is None
+def test_full_sync_stages_every_index_in_one_write(spark, sink):
+    """One staged write feeds every generation: each alias holds exactly
+    its live documents, and the staging dir is removed afterwards."""
+    report = full_sync(
+        spark, _docs(spark, _three_index_rows()), sink, now=datetime(2024, 2, 1)
     )
+    # ascending size: beta(1) < alpha(2 live + 1 tombstone) < gamma(3)
+    assert report.indexes == ["beta", "alpha", "gamma"]
+    assert report.written == {"beta": 1, "alpha": 2, "gamma": 3}
+    assert report.reconcile_ok == {"beta": True, "alpha": True, "gamma": True}
+    assert {
+        idx: sorted(
+            (r.id, r.document) for r in sink.read_alias(spark, idx).collect()
+        )
+        for idx in report.indexes
+    } == {
+        "beta": [("10", '{"v": 10}')],
+        "alpha": [("1", '{"v": 1}'), ("2", '{"v": 2}')],
+        "gamma": [("20", '{"v": 20}'), ("21", '{"v": 21}'), ("22", '{"v": 22}')],
+    }
+    assert not [d for d in os.listdir(sink.base_dir) if d.startswith("_stage")]
+
+
+def test_full_sync_plan_scans_fact_table_once(spark, tmp_path):
+    """The data plane is ONE FileScan: no per-index filter loop
+    (O(#indexes) scans)."""
+    from prefect_flow_arc_indexer_spark.pipeline.runner import live_documents
+
+    src = str(tmp_path / "docs_parquet")
+    _docs(spark, _three_index_rows()).write.parquet(src)
+    docs = spark.read.parquet(src)
+    plan = (
+        live_documents(docs, ["alpha", "beta", "gamma"])
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert plan.count("FileScan parquet") == 1
+
+
+def _source_scans(spark, src: str, run) -> int:
+    """Scans of ``src`` by the SQL executions ``run()`` starts: the
+    ``Location:`` lines naming ``src`` in their physical plans, read from
+    the SQL status store (it works with the UI disabled)."""
+    sc = spark.sparkContext._jsc.sc()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def next_execution_id() -> int:
+        sc.listenerBus().waitUntilEmpty()
+        n = int(store.executionsCount())
+        if n == 0:
+            return 0
+        return int(store.executionsList(n - 1, 1).apply(0).executionId()) + 1
+
+    lo = next_execution_id()
+    run()
+    scans = 0
+    for eid in range(lo, next_execution_id()):
+        got = store.execution(eid)
+        if got.isDefined():
+            scans += sum(
+                1
+                for line in got.get().physicalPlanDescription().splitlines()
+                if line.strip().startswith("Location:") and src in line
+            )
+    return scans
+
+
+def test_full_sync_source_scans_independent_of_index_count(spark, tmp_path):
+    """A full sync reads the source a fixed number of times whatever the
+    number of indexes (enumerate, order, one staged write) — a
+    deterministic counter, so a per-index source job cannot creep back."""
+
+    def scans(n_indexes: int) -> int:
+        rows = [
+            (f"idx{i}", f"{i}-{j}", '{"v": 0}', False, "2024-01-01 00:00:00")
+            for i in range(n_indexes)
+            for j in range(i + 1)
+        ]
+        src = str(tmp_path / f"docs_{n_indexes}")
+        _docs(spark, rows).write.parquet(src)
+        docs = spark.read.parquet(src)
+        sink = VersionedSink(str(tmp_path / f"sink_{n_indexes}"))
+        return _source_scans(
+            spark, src, lambda: full_sync(spark, docs, sink, now=datetime(2024, 2, 1))
+        )
+
+    three = scans(3)
+    assert three > 0
+    assert scans(6) == three
+
+
+def test_full_sync_publishes_empty_generation_for_all_tombstone_index(
+    spark, sink
+):
+    rows = BASE_ROWS + [
+        ("gamma", "30", '{"v": 30}', True, "2024-01-05 00:00:00"),
+    ]
+    report = full_sync(spark, _docs(spark, rows), sink, now=datetime(2024, 2, 1))
+    assert report.written["gamma"] == 0
+    assert report.reconcile_ok["gamma"] is True
+    assert sink.alias_exists("gamma")
+
+
+def test_full_sync_all_tombstone_bucketed_keeps_bucket_marker(spark, sink):
+    """An all-tombstone index under a bucketed full sync must publish its
+    empty generation IN the bucketed layout — otherwise the index silently
+    falls back to O(corpus) full-rewrite merges forever (ADVICE r5)."""
+    from prefect_flow_arc_indexer_spark.pipeline.bucketed import bucket_count
+
+    docs = _docs(
+        spark,
+        [
+            ("alpha", "1", '{"v": 1}', False, "2024-01-01 00:00:00"),
+            ("ghost", "9", '{"v": 9}', True, "2024-01-01 00:00:00"),
+        ],
+    )
+    report = full_sync(
+        spark, docs, sink, now=datetime(2024, 2, 1), bucketed=True, n_buckets=4
+    )
+    assert report.written == {"alpha": 1, "ghost": 0}
+    manifest = sink.read_manifest()
+    assert bucket_count(sink, manifest["ghost"]) == 4
+    assert bucket_count(sink, manifest["alpha"]) == 4
+    assert sink.read_alias(spark, "ghost").count() == 0
+
+
+def test_full_sync_handles_partition_escaped_index_names(spark, sink):
+    """An index name Spark partition-escapes ('a:b' stages as index=a%3Ab)
+    must still sync: the staged dir is resolved by DECODING the escaping,
+    not by string-building 'index={value}' (which would miss it and either
+    publish an empty generation — the pre-r6 bug — or abort a good run)."""
+    docs = _docs(
+        spark,
+        [
+            ("a:b", "1", '{"v": 1}', False, "2024-01-01 00:00:00"),
+            ("a:b", "2", '{"v": 2}', False, "2024-01-01 00:00:00"),
+        ],
+    )
+    report = full_sync(spark, docs, sink, now=datetime(2024, 2, 1))
+    assert report.written == {"a:b": 2}
+    assert report.reconcile_ok == {"a:b": True}
+    assert {r.id for r in sink.read_alias(spark, "a:b").collect()} == {"1", "2"}
+
+
+def test_full_sync_missing_stage_aborts_instead_of_empty_publish(
+    spark, sink, monkeypatch
+):
+    """A genuinely lost staged partition (prior partial failure) must abort
+    before publish — committing would put an EMPTY generation over live
+    data."""
+    import prefect_flow_arc_indexer_spark.pipeline.runner as runner_mod
+
+    docs = _docs(spark, [("alpha", "1", '{"v": 1}', False, "2024-01-01 00:00:00")])
+    # the stage->generation promotion silently does nothing: the generation
+    # dir never appears while the observed count says 1 doc exists
+    monkeypatch.setattr(runner_mod.shutil, "move", lambda src, dst: None)
+    with pytest.raises(RuntimeError, match="staged generation|count audit"):
+        full_sync(spark, docs, sink, now=datetime(2024, 2, 1))
+    assert "alpha" not in sink.read_manifest()
+
+
+def test_cli_bucketed_full_sync(tmp_path, capsys):
+    """--bucketed reaches the full sync from the CLI: the single-scan data
+    plane lays down hash-bucketed generations."""
+    from prefect_flow_arc_indexer_spark.__main__ import main
+    from prefect_flow_arc_indexer_spark.pipeline.bucketed import bucket_count
+
+    sink_dir = str(tmp_path / "cli_sink")
+    rc = main(
+        [
+            "--source", SF_DIR,
+            "--sink-dir", sink_dir,
+            "--full-sync",
+            "--bucketed",
+            "--n-buckets", "4",
+        ]
+    )
+    assert rc == 0
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert report["written"] and all(report["reconcile_ok"].values())
+    sink = VersionedSink(sink_dir)
+    for idx, gen in sink.read_manifest().items():
+        assert bucket_count(sink, gen) == 4, idx
 
 
 def test_adaptive_bulk_shrink_steps_down(spark):
@@ -559,9 +758,10 @@ def test_sink_compaction_reduces_files_and_preserves_rows(spark, sink):
     generation — readers only ever see a complete generation."""
     rows = [("alpha", str(i), '{"v": %d}' % i, False, "2024-01-01 00:00:00")
             for i in range(200)]
-    docs = _docs(spark, rows).repartition(16)
-    full_sync(spark, docs, sink, now=datetime(2024, 2, 1))
-    old_gen = sink.read_manifest()["alpha"]
+    # a generation as a CDC merge leaves it: one file per shuffle partition
+    live = _docs(spark, rows).select("id", "document").repartition(16)
+    old_gen = sink.write_generation(live, "alpha", "2024-02-01t00.00.00")
+    sink.publish("alpha", old_gen)
     old_files = [
         f for f in os.listdir(sink.generation_path(old_gen))
         if f.endswith(".parquet")

@@ -102,3 +102,22 @@ def test_ivfpq_candidates_cell_bounded(spark, duck):
     # nprobe sanity: each query probes at most PQ_NPROBE cells, so its
     # candidate set is a strict subset of the corpus
     assert PQ_NPROBE >= 1
+
+
+def test_ivfpq_adc_empty_codebook_returns_no_rows(spark, tmp_path):
+    """Vectors without a label train no centroid: with every label NULL the
+    codebook is empty, and IVF-PQ search returns no rows (no probe list
+    can be built) instead of failing."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from prefect_flow_arc_indexer_spark.operators.pq import q_ivfpq_adc
+
+    t = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    t = t.set_column(
+        t.schema.get_field_index("label"),
+        "label",
+        pa.nulls(t.num_rows, type=pa.int32()),
+    )
+    pq.write_table(t, str(tmp_path / "embeddings.parquet"))
+    assert q_ivfpq_adc(spark, str(tmp_path)).collect() == []

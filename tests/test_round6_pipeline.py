@@ -1,6 +1,6 @@
 """Round-6 pipeline fixes (VERDICT r5 tasks 4/7/8 + ADVICE r5): the CLI
 ES mirror end-to-end over a real REST stub (delta-only upserts + tombstone
-deletes), one-pass publish guards, and the bucketed empty-generation marker.
+deletes), ES retry/backoff parity and time-travel retention.
 """
 
 from __future__ import annotations
@@ -11,7 +11,6 @@ import threading
 from datetime import datetime
 
 import pytest
-from pyspark.sql import functions as F
 
 from prefect_flow_arc_indexer_spark.pipeline.sinks import VersionedSink
 from prefect_flow_arc_indexer_spark.streaming.watermark import WatermarkStore
@@ -364,87 +363,6 @@ def test_swap_alias_changeover_removes_and_deletes_old():
             {"add": {"index": "alpha_2024", "alias": "alpha"}},
         ]
     }
-
-
-# -- one-pass publish guards (ADVICE r5) --------------------------------------
-
-DOCS_SCHEMA = (
-    "`index` string, id string, document string, is_deleted boolean, "
-    "updated_at string"
-)
-
-
-def _docs(spark, rows):
-    return spark.createDataFrame(rows, DOCS_SCHEMA).withColumn(
-        "updated_at", F.col("updated_at").cast("timestamp")
-    )
-
-
-def test_one_pass_handles_partition_escaped_index_names(spark, tmp_path):
-    """An index name Spark partition-escapes ('a:b' stages as index=a%3Ab)
-    must still sync: the staged dir is resolved by DECODING the escaping,
-    not by string-building 'index={value}' (which would miss it and either
-    publish an empty generation — the pre-r6 bug — or abort a good run)."""
-    from prefect_flow_arc_indexer_spark.pipeline.runner import full_sync
-
-    sink = VersionedSink(str(tmp_path / "sink"))
-    docs = _docs(
-        spark,
-        [
-            ("a:b", "1", '{"v": 1}', False, "2024-01-01 00:00:00"),
-            ("a:b", "2", '{"v": 2}', False, "2024-01-01 00:00:00"),
-        ],
-    )
-    report = full_sync(spark, docs, sink, now=datetime(2024, 2, 1), one_pass=True)
-    assert report.written == {"a:b": 2}
-    assert report.reconcile_ok == {"a:b": True}
-    assert {r.id for r in sink.read_alias(spark, "a:b").collect()} == {"1", "2"}
-
-
-def test_one_pass_missing_stage_aborts_instead_of_empty_publish(
-    spark, tmp_path, monkeypatch
-):
-    """A genuinely lost staged partition (prior partial failure) must abort
-    before publish — committing would put an EMPTY generation over live
-    data (previously: published with reconcile_ok=False, silently)."""
-    import prefect_flow_arc_indexer_spark.pipeline.runner as runner_mod
-
-    sink = VersionedSink(str(tmp_path / "sink"))
-    docs = _docs(spark, [("alpha", "1", '{"v": 1}', False, "2024-01-01 00:00:00")])
-    # the stage->generation promotion silently does nothing: the generation
-    # dir never appears while the observed count says 1 doc exists
-    monkeypatch.setattr(runner_mod.shutil, "move", lambda src, dst: None)
-    with pytest.raises(RuntimeError, match="one-pass (stage|audit)"):
-        runner_mod.full_sync(
-            spark, docs, sink, now=datetime(2024, 2, 1), one_pass=True
-        )
-    assert "alpha" not in sink.read_manifest()
-
-
-def test_one_pass_all_tombstone_bucketed_keeps_bucket_marker(spark, tmp_path):
-    """An all-tombstone index under bucketed one-pass must publish its empty
-    generation IN the bucketed layout — otherwise the index silently falls
-    back to O(corpus) full-rewrite merges forever (ADVICE r5)."""
-    from prefect_flow_arc_indexer_spark.pipeline.bucketed import bucket_count
-    from prefect_flow_arc_indexer_spark.pipeline.runner import full_sync
-
-    sink = VersionedSink(str(tmp_path / "sink"))
-    docs = _docs(
-        spark,
-        [
-            ("alpha", "1", '{"v": 1}', False, "2024-01-01 00:00:00"),
-            ("ghost", "9", '{"v": 9}', True, "2024-01-01 00:00:00"),
-        ],
-    )
-    report = full_sync(
-        spark, docs, sink, now=datetime(2024, 2, 1),
-        one_pass=True, bucketed=True, n_buckets=4,
-    )
-    assert report.written == {"alpha": 1, "ghost": 0}
-    manifest = sink.read_manifest()
-    assert bucket_count(sink, manifest["ghost"]) == 4
-    assert bucket_count(sink, manifest["alpha"]) == 4
-    assert sink.read_alias(spark, "ghost").count() == 0
 
 
 # -- ES retry/backoff parity (VERDICT r5 task 4) -------------------------------
